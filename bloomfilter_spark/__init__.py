@@ -18,6 +18,12 @@ Design (see SURVEY.md §7):
 
 __version__ = "0.2.0"
 
+# every Python task flushes the import caches; keep that from re-reading
+# unchanged zip archives (see plans/session.py)
+from bloomfilter_spark.plans.session import install_zip_cache_check
+
+install_zip_cache_check()
+
 from bloomfilter_spark.sketches.bloom import BloomFilter
 from bloomfilter_spark.sketches.blocked import BlockedBloomFilter, blocked_bloom_factory
 from bloomfilter_spark.sketches.hll import HyperLogLog

@@ -40,7 +40,11 @@ def normalize_url(url: Column | str) -> Column:
     )
     userinfo = F.regexp_extract(authority, r"^([^/?#]*@)", 1)
     hostport = F.lower(F.regexp_replace(authority, r"^[^/?#]*@", ""))
-    prefix = F.concat(scheme, F.lit("://"), userinfo, hostport)
+    # a scheme-less string ('example.com/a') has no prefix to canonicalize:
+    # it passes through as path + query, never gaining a bare '://'
+    prefix = F.when(
+        scheme != "", F.concat(scheme, F.lit("://"), userinfo, hostport)
+    ).otherwise(F.lit(""))
     rest = F.regexp_replace(u, _PREFIX_RE, "")
     # 3. default ports (scheme is lowercase already)
     prefix = F.when(

@@ -235,7 +235,11 @@ def tree_merge_replay(
     return _nary_merge(factory, [serde.deserialize(b) for _, b in pairs])
 
 
-def merge_partials(partials: DataFrame, factory: Callable[[], object]):
+def merge_partials(
+    partials: DataFrame,
+    factory: Callable[[], object],
+    n_parts: int | None = None,
+):
     """Combine partial blobs into one sketch.
 
     Commutative kinds (Bloom OR / HLL max / CMS sum) ride a depth-2
@@ -245,6 +249,10 @@ def merge_partials(partials: DataFrame, factory: Callable[[], object]):
     bounded-fan-in tree (tree_merge_blobs) so no build path ever collects
     all partial blobs to the driver.  Small fan-ins (≤ DEFAULT_MERGE_FANIN
     blobs — already driver-sized) merge n-ary in canonical partition order.
+
+    n_parts: the partition count of `partials`, when the caller knows it
+    (`ensure_parallelism_counted`); reading it back from a repartitioned
+    input runs the shuffle-map stage as a job of its own.
     """
     # KIND without materializing a sketch when the factory carries it
     # (all build.py factories do): factory() for a 1e9-key Bloom would
@@ -252,7 +260,8 @@ def merge_partials(partials: DataFrame, factory: Callable[[], object]):
     kind = getattr(factory, "KIND", None)
     if kind is None:
         kind = factory().KIND
-    n_parts = partials.rdd.getNumPartitions()
+    if n_parts is None:
+        n_parts = partials.rdd.getNumPartitions()
     if n_parts > DEFAULT_MERGE_FANIN:
         if kind in _COMMUTATIVE_KINDS:
             # zeroValue is an EMPTY sentinel, not a dense empty-sketch
@@ -296,11 +305,16 @@ def build_sketch(
     Narrow inputs (a small file = 1 split) are fanned out to the cluster
     first; partial_build itself always respects the caller's partitioning
     (checkpointing relies on that contract)."""
-    from bloomfilter_spark.plans.skew import ensure_parallelism
+    from bloomfilter_spark.plans.skew import ensure_parallelism_counted
 
+    parted, n_parts = ensure_parallelism_counted(df)
+    if parted is df:
+        # no repartition: n_parts was read before partial_build pruned the
+        # columns, and AQE may coalesce the pruned plan's shuffles to
+        # another count — let merge_partials read the partials' own
+        n_parts = None
     return merge_partials(
-        partial_build(ensure_parallelism(df), cols, factory, weight_col),
-        factory,
+        partial_build(parted, cols, factory, weight_col), factory, n_parts
     )
 
 
@@ -320,7 +334,7 @@ def build_sketch_with_deletes(
     one treeAggregate — identical topology to build_sketch."""
     from pyspark.sql import functions as F
 
-    from bloomfilter_spark.plans.skew import ensure_parallelism
+    from bloomfilter_spark.plans.skew import ensure_parallelism_counted
 
     signed = (
         inserts_df.select(F.col(key_col).alias("__key"), F.lit(1).alias("__delta"))
@@ -330,7 +344,7 @@ def build_sketch_with_deletes(
             )
         )
     )
-    signed = ensure_parallelism(signed)
+    signed, n_parts = ensure_parallelism_counted(signed)
 
     def build_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -357,7 +371,7 @@ def build_sketch_with_deletes(
         )
 
     partials = signed.mapInPandas(build_iter, schema=PARTIAL_SCHEMA)
-    return merge_partials(partials, factory)
+    return merge_partials(partials, factory, n_parts)
 
 
 def build_sketch_weighted(

@@ -4,7 +4,7 @@ At 100 TB the scan dominates: reading the table once per sketch would be a
 5-7× waste.  This pipeline folds ALL the suite's sketches (Bloom over url,
 HLL over url/host, CMS over host/lang, Misra-Gries heavy-hitter hosts,
 KLL + t-digest over text length) into
-a single `mapInPandas` pass — one parquet scan, one JVM→Python Arrow hop —
+a single `mapInArrow` pass — one parquet scan, one JVM→Python Arrow hop —
 then reduces the per-partition partial blobs with a deterministic bounded
 fan-in merge tree:
 
@@ -123,11 +123,11 @@ def build_multi(
     ~2×parallelism buckets so every core merges, instead of a handful of
     fat tasks serializing the reduction.
     """
-    from bloomfilter_spark.plans.skew import ensure_parallelism
+    from bloomfilter_spark.plans.skew import ensure_parallelism_counted
 
     names = list(specs)
     cols = sorted({c for c, _ in specs.values()})
-    pruned = ensure_parallelism(df.select(*cols))
+    pruned, n_parts = ensure_parallelism_counted(df.select(*cols))
     factories = {n: f for n, (_, f) in specs.items()}
     col_of = {n: c for n, (c, _) in specs.items()}
 
@@ -148,7 +148,6 @@ def build_multi(
         yield pa.RecordBatch.from_pydict(out)
 
     partials = pruned.mapInArrow(build_iter, schema=schema)
-    n_parts = pruned.rdd.getNumPartitions()
     par = df.sparkSession.sparkContext.defaultParallelism
     return _merge_tree(
         partials, schema, names, factories, n_parts, fanin, par,
@@ -199,14 +198,13 @@ def build_multi_checkpointed(
         STATS_SCHEMA,
         _atomic_write,
     )
-    from bloomfilter_spark.plans.skew import ensure_parallelism
+    from bloomfilter_spark.plans.skew import ensure_parallelism_counted
 
     names = list(specs)
     cols = sorted({c for c, _ in specs.values()})
-    pruned = ensure_parallelism(df.select(*cols))
+    pruned, n_parts = ensure_parallelism_counted(df.select(*cols))
     factories = {n: f for n, (_, f) in specs.items()}
     col_of = {n: c for n, (c, _) in specs.items()}
-    n_parts = pruned.rdd.getNumPartitions()
 
     os.makedirs(ckpt_dir, exist_ok=True)
     # merge_par pins the ADAPTIVE merge-tree shape: fanin=None sizes each

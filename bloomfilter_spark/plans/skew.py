@@ -42,11 +42,25 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     a no-op (returns df) when the scan already has enough splits — at real
     scale the 128 MB-split scan parallelism is already there and no extra
     shuffle happens."""
+    return ensure_parallelism_counted(df, min_parts)[0]
+
+
+def ensure_parallelism_counted(
+    df: DataFrame, min_parts: int | None = None
+) -> tuple[DataFrame, int]:
+    """`ensure_parallelism` plus the partition count of what it returns.
+
+    Callers that need the count must take it from here: reading it back
+    with `.rdd.getNumPartitions()` on a `repartition(n)` makes AQE run the
+    shuffle-map stage as a job of its own, which the build then runs
+    again.  An explicit-count repartition is never coalesced by AQE, so
+    `min_parts` is its count."""
     if min_parts is None:
         min_parts = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= min_parts:
-        return df
-    return df.repartition(min_parts)
+    n = df.rdd.getNumPartitions()
+    if n >= min_parts:
+        return df, n
+    return df.repartition(min_parts), min_parts
 
 
 def partition_stats(df: DataFrame) -> DataFrame:

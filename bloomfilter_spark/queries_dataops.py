@@ -1120,11 +1120,12 @@ WITH messy AS (
   FROM s1
 ), parts AS (
   SELECT doc_id,
-         lower(regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.\-]*)://', 1))
-           || '://'
-           || regexp_extract(authority, '^([^/?#]*@)', 1)
-           || lower(regexp_replace(authority, '^[^/?#]*@', ''))
-           AS prefix,
+         CASE WHEN regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.\-]*)://', 1) <> ''
+              THEN lower(regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.\-]*)://', 1))
+                   || '://'
+                   || regexp_extract(authority, '^([^/?#]*@)', 1)
+                   || lower(regexp_replace(authority, '^[^/?#]*@', ''))
+              ELSE '' END AS prefix,
          regexp_replace(u, '^([a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]*)', '') AS rest,
          lower(CASE
            WHEN regexp_extract(u,

@@ -8,7 +8,8 @@ Run via scripts/run_spark_submit.sh, which ships the library as a
   1. reads (or generates+caches) the Common-Crawl-style pages table,
   2. builds the full sketch suite in ONE scan (operators/pipeline.py),
      optionally checkpointed (--ckpt-dir → resumable),
-  3. prints one JSON line: rows, wall seconds, docs/sec, sketch stats.
+  3. prints one JSON line: rows, wall seconds, docs/sec, sketch stats, and
+     how many workers run the package's stat-checked import-cache flush.
 
 The same script at --cores 8 vs --cores 32 is the N→4N scaling-efficiency
 evidence recorded in BENCH.md.
@@ -119,6 +120,28 @@ def main() -> None:
     }
     if "hll_url" in suite:
         out["hll_url_est"] = round(suite["hll_url"].estimate(), 1)
+
+    # which workers run the stat-checked import-cache flush that the
+    # package installs on import (plans/session.py); unpickling _report
+    # imports the package from the --py-files zip
+    from bloomfilter_spark.plans import session
+
+    def _report(batches):
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"ok": [session.zip_cache_check_installed()]}
+        )
+
+    checked = (
+        spark.range(par, numPartitions=par)
+        .mapInArrow(_report, schema="ok boolean")
+        .toPandas()
+        .ok
+    )
+    out["workers_zip_cache_checked"] = f"{int(checked.sum())}/{len(checked)}"
     print(json.dumps(out))
     sys.stdout.flush()
     spark.stop()

@@ -9,6 +9,7 @@ duplicates — and the merge-tree guarantees of operators/pipeline.py.
 from __future__ import annotations
 
 import hashlib
+import time
 
 import numpy as np
 import pandas as pd
@@ -250,6 +251,44 @@ def test_merge_tree_small_fanin(spark):
     tl = df.select("text_len").toPandas().text_len.to_numpy()
     q50 = deep["kll_textlen"].quantile(0.5)
     assert abs((tl <= q50).mean() - 0.5) <= 0.05
+
+
+def test_build_multi_jobs_on_narrow_input(spark):
+    """A 1-partition input is fanned out with repartition(n).  The build
+    takes n from ensure_parallelism_counted: reading it back from the
+    repartition would make AQE run its shuffle-map stage as a job of its
+    own, which the fold then runs again."""
+    from bloomfilter_spark.operators.build import bloom_factory, kll_factory
+    from bloomfilter_spark.operators.pipeline import build_multi, with_page_features
+
+    df = with_page_features(pages_df(spark, 200, num_partitions=1))
+    specs = {
+        "bloom_url": ("url", bloom_factory(1024, 0.01)),
+        "kll_textlen": ("text_len", kll_factory(k=200)),
+    }
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test_build_multi_jobs_on_narrow_input"
+    sc.setJobGroup(group, group)
+    try:
+        suite, rows = build_multi(df, specs, return_rows=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows == 200
+    # the status store is fed asynchronously: once a later job is visible,
+    # so are all the group's jobs
+    sc.setJobGroup(group + ":sentinel", "sentinel")
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + ":sentinel"):
+        assert time.monotonic() < deadline, "sentinel job never reported"
+        time.sleep(0.05)
+    # one job for the repartition's shuffle-map stage, one for the fold
+    # and the collect of the 8 partials
+    assert len(tracker.getJobIdsForGroup(group)) == 2
 
 
 def test_slice_equals_whole_table_rows(spark):
